@@ -5,15 +5,16 @@
         -m lexicator_spark --input <turns.parquet> --out <root> \
         [--stage all|extract|link|canonicalize|materialize|entities] \
         [--no-resume] [--impl native|pandas] [--synth N] \
-        [--refresh] [--refresh-e2e] [--dedup METHOD] [--dedup-turns] \
-        [--decontam BENCH.parquet] \
+        [--refresh [--change-feed FEED.parquet]] [--dedup METHOD] \
+        [--dedup-turns] [--decontam BENCH.parquet] \
         [--graph degrees|triangles|pagerank] [--compact]
 
 Local smoke: ``python -m lexicator_spark --synth 1000 --out /tmp/kg``.
-``--refresh`` runs the incremental path instead of the full pipeline:
-only the Stage-A buckets containing changed conversations are
-rewritten (the RecentChanges analog, ``refresh_triples_partitioned``);
-downstream stages then recompute from the refreshed raw table.
+``--refresh`` refreshes every stage table in place for the changed
+conversations (the RecentChanges analog, ``plans.refresh.
+refresh_pipeline``), each one row-identical to a full rebuild.  A root
+with a missing stage marker (empty, or cut short by ``--stage``) is
+first built up to date with the resumable pipeline.
 """
 
 from __future__ import annotations
@@ -39,16 +40,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--impl", default="native", choices=["native", "pandas"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--refresh", action="store_true",
-                    help="incremental Stage-A refresh (partition-level "
-                         "upsert) + downstream recompute")
-    ap.add_argument("--refresh-e2e", action="store_true",
-                    help="end-to-end incremental refresh: every stage "
-                         "table updated O(delta) (plans.refresh) — "
-                         "Stage B links only newly-seen surfaces, "
-                         "Stage C merges/splits only delta-adjacent "
+                    help="incremental refresh of every stage table "
+                         "(plans.refresh): only the changed "
+                         "conversations are re-extracted, Stage B "
+                         "links only newly-seen surfaces, Stage C "
+                         "merges/splits only delta-adjacent "
                          "components, materialize upserts only touched "
                          "buckets; result row-identical to a full "
-                         "rebuild")
+                         "rebuild.  A root with a missing stage is "
+                         "first built by the resumable pipeline")
     ap.add_argument("--change-feed", default=None, metavar="PATH",
                     help="parquet of conv_ids known changed (the "
                          "RecentChanges feed): --refresh skips the "
@@ -114,21 +114,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
-    if args.refresh and args.stage != "all":
-        # --refresh drops the downstream checkpoints and relies on the
-        # fall-through pipeline to recompute ALL of them; a --stage
-        # cutoff would close the refresh window with stale stages
-        ap.error("--refresh recomputes every downstream stage; "
-                 "--stage cannot be combined with it")
-    if args.refresh_e2e and args.stage != "all":
-        # same contract as --refresh: an in-place refresh of every
-        # stage table has no cutoff point, so a --stage that would be
-        # silently dropped is an error instead
-        ap.error("--refresh-e2e refreshes every stage in place; "
-                 "--stage cannot be combined with it")
-    if args.refresh_e2e and (args.no_resume or args.backfill is not None):
-        ap.error("--refresh-e2e never re-runs the build pipeline; "
-                 "--no-resume/--backfill cannot be combined with it")
+    if args.refresh and (
+        args.stage != "all" or args.no_resume or args.backfill is not None
+    ):
+        # an in-place refresh of every stage table has no cutoff point
+        # and never rebuilds from scratch, so a flag it would silently
+        # drop is an error instead
+        ap.error("--refresh refreshes every stage in place; --stage, "
+                 "--no-resume and --backfill cannot be combined with it")
     if not args.synth and not args.input:
         ap.error("one of --input / --synth is required")  # before JVM spin-up
     if args.compact and not args.input:
@@ -338,10 +331,19 @@ def main(argv: list[str] | None = None) -> int:
 
     from lexicator_spark.plans.pipeline import run_pipeline
 
-    if args.refresh_e2e:
+    if args.refresh:
+        from lexicator_spark.plans.pipeline import _is_done
         from lexicator_spark.plans.refresh import refresh_pipeline
         from lexicator_spark.sources import io as sio
 
+        if not all(_is_done(spark, args.out, s) for s in _STAGES):
+            # an empty or --stage-truncated root: bring every stage up
+            # to date first, then the refresh below has a complete
+            # build to work from (a no-op right after a first build)
+            res = run_pipeline(
+                spark, turns, args.out, resume=True, impl=args.impl
+            )
+            print(json.dumps(_build_summary(res)))
         feed = (
             spark.read.parquet(args.change_feed) if args.change_feed else None
         )
@@ -352,14 +354,10 @@ def main(argv: list[str] | None = None) -> int:
         ):
             # bucketed raw-turns input + feed: the fully-pruned path
             # (raw read prunes to the fed conversations' buckets too)
-            res = refresh_pipeline(
-                spark, None, args.out, change_feed=feed, impl=args.impl,
-                turns_location=args.input,
-            )
-        else:
-            res = refresh_pipeline(
-                spark, turns, args.out, change_feed=feed, impl=args.impl
-            )
+            turns = args.input
+        res = refresh_pipeline(
+            spark, turns, args.out, change_feed=feed, impl=args.impl
+        )
         print(
             json.dumps(
                 {
@@ -374,103 +372,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         spark.stop()
         return 0
-
-    if args.refresh:
-        import os
-
-        from lexicator_spark.operators.incremental import (
-            refresh_triples_partitioned,
-        )
-        from lexicator_spark.sources import fsutil
-
-        raw_path = os.path.join(args.out, "triples_raw")
-        if fsutil.exists(spark, os.path.join(raw_path, "_schema.json")):
-            from lexicator_spark.plans.refresh import (
-                begin_refresh,
-                recover_inflight_refresh,
-            )
-
-            # a prior --refresh that died between its raw upsert and
-            # the downstream recompute left markers that would make
-            # the fall-through run_pipeline skip stale stages; drop
-            # them (plus _surface_stats) before touching anything
-            recover_inflight_refresh(spark, args.out)
-            feed = (
-                spark.read.parquet(args.change_feed)
-                if args.change_feed else None
-            )
-            from lexicator_spark.operators.incremental import (
-                validate_refresh_preconditions,
-            )
-            from lexicator_spark.sources import io as sio
-
-            pruned = (
-                feed is not None
-                and not args.synth
-                and sio.read_bucket_meta(spark, args.input) is not None
-            )
-            # fail-fast reads and validations BEFORE the in-flight
-            # marker: a refresh refused here mutated nothing and must
-            # not strand a marker that would force a spurious
-            # O(corpus) downstream rebuild on the next invocation
-            validate_refresh_preconditions(
-                spark, raw_path,
-                turns_location=args.input if pruned else None,
-            )
-            # in-flight until the fall-through run_pipeline below has
-            # re-synced the downstream stages (closed after it)
-            begin_refresh(spark, args.out)
-            if pruned:
-                # bucketed raw-turns input + feed: the fully
-                # delta-scoped path (prunes the raw read too)
-                from lexicator_spark.operators.incremental import (
-                    refresh_from_feed,
-                )
-
-                res = refresh_from_feed(
-                    spark, args.input, raw_path, feed, impl=args.impl
-                )
-            else:
-                res = refresh_triples_partitioned(
-                    spark, turns, raw_path, impl=args.impl, change_feed=feed
-                )
-            if res.n_changed > 0:
-                # keep _surface_stats in step with the raw table (the
-                # downstream recompute below re-syncs link/canonical,
-                # and the stats table must record the universe that
-                # sync saw — plans/refresh.py consistency contract)
-                from lexicator_spark.plans.refresh import (
-                    update_stage_bucket_counts,
-                    update_surface_stats,
-                )
-
-                update_surface_stats(spark, args.out, list(res.touched_buckets))
-                # keep the extract marker's per-bucket counts current
-                # too: refresh_pipeline's O(delta) lineage merges
-                # against them (plans/refresh._delta_bucket_counts)
-                update_stage_bucket_counts(
-                    spark, args.out, "extract", raw_path,
-                    list(res.touched_buckets),
-                )
-                # downstream stages derive from the refreshed raw
-                # table: drop their checkpoints so run_pipeline
-                # recomputes them, keep extract's (the refresh IS the
-                # extract).  A no-op refresh keeps every checkpoint —
-                # the whole invocation is then metadata-only.
-                for stage in _STAGES[1:]:
-                    fsutil.delete(
-                        spark,
-                        os.path.join(args.out, "_checkpoints", f"{stage}.json"),
-                    )
-            print(
-                json.dumps(
-                    {
-                        "refreshed_convs": res.n_changed,
-                        "buckets_touched": res.n_buckets_touched,
-                    }
-                )
-            )
-        # no prior stage table → fall through to the full pipeline
 
     # --stage X runs the pipeline up to and including X (checkpoints
     # make re-running earlier stages free)
@@ -487,26 +388,19 @@ def main(argv: list[str] | None = None) -> int:
         backfill_groups=args.backfill, turns_source=turns_source,
         stop_after=None if args.stage == "all" else args.stage,
     )
-    if args.refresh:
-        # downstream stages are consistent with the refreshed raw
-        # table again — close the crash-recovery window opened above
-        # (no-op when the refresh fell through to a first full build)
-        from lexicator_spark.plans.refresh import end_refresh
-
-        end_refresh(spark, args.out)
-    print(
-        json.dumps(
-            {
-                "stages_run": res.stages_run,
-                "stages_skipped": res.stages_skipped,
-                "triples_path": res.triples_path,
-                "entities_path": res.entities_path,
-                "lineage": res.lineage,
-            }
-        )
-    )
+    print(json.dumps(_build_summary(res)))
     spark.stop()
     return 0
+
+
+def _build_summary(res) -> dict:
+    return {
+        "stages_run": res.stages_run,
+        "stages_skipped": res.stages_skipped,
+        "triples_path": res.triples_path,
+        "entities_path": res.entities_path,
+        "lineage": res.lineage,
+    }
 
 
 if __name__ == "__main__":

@@ -3,13 +3,17 @@ conversations — the Spark re-design of lexicator's RecentChanges
 delta refresh (SURVEY.md §2 #2, ``ContentStore.refresh`` /
 ``find_recent_changes`` [M]).
 
-Batch form (parquet backend): the processed frontier is the per-conv
-max ``(turn_idx)`` already present in the stage table; new work =
-turns beyond the frontier, PLUS every turn of any conversation that
-gained turns (the extraction window and ``replies_to`` need the whole
-conversation — re-deriving a conversation is idempotent because stage
-writes are keyed dedups).  With Iceberg the frontier bookkeeping is
-replaced by incremental snapshot reads — same function shape.
+Batch form (parquet backend): ``refresh_triples_partitioned`` is the
+one Stage-A refresh.  The processed frontier is an explicit
+``_frontier(conv_id, done_max_idx)`` table next to the stage table;
+new work = every turn of any conversation that gained turns beyond it
+(the extraction window and ``replies_to`` need the whole conversation
+— re-deriving a conversation is idempotent: its touched buckets are
+rewritten with complete replacement content).  A change feed replaces the detection with the
+listed conversations, the RecentChanges poll proper.  With Iceberg
+the frontier bookkeeping is replaced by incremental snapshot reads —
+same function shape.  ``backfill_triples`` is the chunked initial
+build, kept separate: it has no kept side to merge.
 
 Scale: the frontier aggregate is one shuffle over (conv_id); the
 anti/semi joins run on conv_id — co-partitioned with the stage
@@ -29,29 +33,6 @@ from pyspark.sql import functions as F
 from lexicator_spark.operators.extract import extract_triples
 from lexicator_spark.sources import fsutil
 from lexicator_spark.sources import io as sio
-
-
-def changed_conversations(turns: DataFrame, done_triples: DataFrame) -> DataFrame:
-    """conv_ids that are new or have turns beyond the processed
-    frontier recorded in the stage table.
-
-    Caveat: a conversation whose turns produced zero triples has no
-    frontier row and re-derives on every refresh (a no-op — extraction
-    is deterministic).  If that tail matters at scale, persist an
-    explicit ``_frontier(conv_id, max_turn_idx)`` table instead; the
-    join shape below is unchanged."""
-    frontier = done_triples.groupBy("conv_id").agg(
-        F.max("turn_idx").alias("done_max_idx")
-    )
-    latest = turns.groupBy("conv_id").agg(F.max("turn_idx").alias("max_idx"))
-    return (
-        latest.join(frontier, "conv_id", "left")
-        .filter(
-            F.col("done_max_idx").isNull()
-            | (F.col("max_idx") > F.col("done_max_idx"))
-        )
-        .select("conv_id")
-    )
 
 
 _ISIN_DELTA_MAX = 1000
@@ -89,85 +70,26 @@ def _delta_good_triples(
     return good
 
 
-def extract_incremental(
-    turns: DataFrame, done_triples: DataFrame, impl: str = "native"
-) -> DataFrame:
-    """Good triples for new/changed conversations only.  Union the
-    result with the untouched part of the stage table (or MERGE under
-    Iceberg) to refresh the stage."""
-    changed = changed_conversations(turns, done_triples)
-    return _delta_good_triples(turns, changed, impl)
-
-
-def refresh_triples(
-    turns: DataFrame, done_triples: DataFrame, impl: str = "native"
-) -> DataFrame:
-    """Full refreshed stage table: untouched conversations' existing
-    triples + re-derived triples for changed conversations.  The
-    changed-conversation set is computed ONCE and feeds both the keep
-    anti-join and the delta extraction."""
-    changed = changed_conversations(turns, done_triples).localCheckpoint(
-        eager=True
-    )
-    kept = done_triples.join(changed, "conv_id", "left_anti")
-    # same_as/canonical rows carry conv_id NULL — they are global and
-    # always recomputed downstream, never kept here
-    kept = kept.filter(F.col("conv_id").isNotNull())
-    return kept.unionByName(_delta_good_triples(turns, changed, impl))
-
-
 def validate_refresh_preconditions(
     spark: SparkSession,
     stage_location: str,
-    turns_location: str | None = None,
+    turns: DataFrame | str,
+    change_feed: DataFrame | None = None,
 ) -> dict | None:
-    """Raise — without mutating anything — the ValueErrors the refresh
-    entry points would raise before their first write.  Callers that
-    bracket a refresh with the crash-recovery in-flight marker
-    (``plans/refresh.begin_refresh``) run this FIRST, so a mere
-    validation failure cannot strand the marker and force a spurious
-    O(corpus) downstream rebuild on the next run.
+    """Raise — without mutating anything — the ValueErrors
+    ``refresh_triples_partitioned`` would raise before its first
+    write.  Callers that bracket a refresh with the crash-recovery
+    in-flight marker (``plans/refresh.begin_refresh``) run this FIRST,
+    so a mere validation failure cannot strand the marker and force a
+    spurious O(corpus) downstream rebuild on the next run.
 
     Checks: no unfinished chunked backfill on the stage table, and —
-    for the feed-pruned path (``turns_location`` given) — frontier
-    existence plus conv_id bucketing of the raw-turns table.  Returns
-    the turns table's bucket meta (``None`` when no ``turns_location``)
-    so the feed path doesn't re-read the sidecar."""
-    _refuse_unfinished_backfill(spark, stage_location)
-    if turns_location is None:
-        return None
-    if not fsutil.exists(spark, _frontier_location(stage_location)):
-        raise ValueError(
-            f"stage at {stage_location} has no _frontier yet: run one "
-            "full-corpus refresh_triples_partitioned to bootstrap it "
-            "before feed-scoped refreshes"
-        )
-    t_meta = sio.read_bucket_meta(spark, turns_location)
-    if t_meta is None:
-        raise ValueError(
-            f"turns table at {turns_location} is not bucketed "
-            "(no _buckets.json): feed-scoped pruning needs "
-            "sio.write_table's conv_id bucketing"
-        )
-    if t_meta["partition_key"] != "conv_id":
-        # pruning here is load-bearing for CORRECTNESS, not just speed:
-        # the fed conversations' rows must be inside the pruned buckets
-        # or the refresh sees them as absent and DELETES their triples
-        # (removed-conversation semantics)
-        raise ValueError(
-            f"turns table at {turns_location} is bucketed on "
-            f"{t_meta['partition_key']} (_buckets.json), not conv_id: "
-            "feed-scoped pruning would miss the fed conversations and "
-            "delete their triples; rebucket on conv_id or use "
-            "refresh_triples_partitioned with the full snapshot"
-        )
-    return t_meta
-
-
-def _refuse_unfinished_backfill(spark: SparkSession, stage_location: str) -> None:
-    """A detection refresh over a half-backfilled stage table would
-    re-extract every remaining conversation in one unchunked pass —
-    refuse until the backfill completes."""
+    when ``turns`` names a raw-turns table (the feed-pruned path) — a
+    change feed, frontier existence and conv_id bucketing of that
+    table.  Returns the turns table's bucket meta (``None`` for a
+    DataFrame ``turns``) so the refresh doesn't re-read the sidecar."""
+    # a detection refresh over a half-backfilled stage table would
+    # re-extract every remaining conversation in one unchunked pass
     mpath = _backfill_marker(stage_location)
     if fsutil.exists(spark, mpath):
         marker = json.loads(fsutil.read_text(spark, mpath))
@@ -179,73 +101,41 @@ def _refuse_unfinished_backfill(spark: SparkSession, stage_location: str) -> Non
                 "detection refresh would re-extract every remaining "
                 "conversation in one unchunked pass"
             )
-
-
-def refresh_from_feed(
-    spark: SparkSession,
-    turns_location: str,
-    stage_location: str,
-    change_feed: DataFrame,
-    impl: str = "native",
-    n_buckets: int | None = None,
-) -> "RefreshResult":
-    """Fully delta-scoped refresh: the end-to-end O(delta) ingest shape.
-
-    ``turns_location`` is a BUCKETED raw-turns table (written /
-    upserted via ``sio.write_table`` / ``sio.upsert_partitions`` keyed
-    on conv_id) that already contains the fed conversations' current
-    turns — the production loop is: a batch of new turns arrives with
-    its conv_id list (the RecentChanges poll), the raw table is
-    bucket-upserted with it (O(delta)), then this refresh re-extracts
-    exactly those conversations (O(delta)).  The raw-turns read here
-    partition-prunes to the buckets containing fed conversations —
-    with ``change_feed`` alone (``refresh_triples_partitioned``) the
-    detection is skipped but the re-extraction semi-join still scans
-    the whole snapshot, which at 29M turns costs ~47 s for a
-    10-conversation delta vs ~14 s via this path (2.9× vs 9.8×
-    against full rebuild; cost here ∝ touched-bucket fraction, so
-    the gap widens with bucket count — BENCH/BASELINE.md).
-
-    The raw table's bucket modulus may differ from the stage's (each
-    side prunes with its own sidecar-recorded modulus).  Requires an
-    existing stage frontier: the one-time bootstrap must see the full
-    corpus, so run one full-corpus refresh (or ``sio.write_table`` +
-    first ``refresh_triples_partitioned``) before switching to the
-    feed loop — raises ValueError otherwise rather than silently
-    leaving unlisted conversations stale."""
-    t_meta = validate_refresh_preconditions(
-        spark, stage_location, turns_location
-    )
-    changed = (
-        change_feed.select("conv_id")
-        # a NULL conv_id names nothing — drop it.  (Note xxhash64(NULL)
-        # is NOT NULL: it folds to the seed, i.e. one constant bucket —
-        # the same constant plans/refresh._null_bucket relies on — so
-        # without this filter a NULL feed row would needlessly drag
-        # that whole bucket into every refresh.)
-        .filter(F.col("conv_id").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    t_touched = sorted(
-        r.p
-        for r in changed.select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(t_meta["n_buckets"]))
-            .cast("int")
-            .alias("p")
+    if not isinstance(turns, str):
+        return None
+    if change_feed is None:
+        raise ValueError(
+            f"turns table at {turns}: a table location is the pruned "
+            "feed path, which needs change_feed (without a feed the "
+            "detection aggregate must see the full snapshot: pass the "
+            "turns as a DataFrame instead)"
         )
-        .distinct()
-        .collect()
-    )
-    turns = (
-        sio.read_table(spark, turns_location, keep_bucket_col=True)
-        .filter(F.col("p_hash").isin(t_touched))
-        .drop("p_hash")
-    )
-    return refresh_triples_partitioned(
-        spark, turns, stage_location, impl=impl, n_buckets=n_buckets,
-        change_feed=changed, _feed_normalized=True,
-    )
+    if not fsutil.exists(spark, _frontier_location(stage_location)):
+        raise ValueError(
+            f"stage at {stage_location} has no _frontier yet: run one "
+            "full-corpus refresh_triples_partitioned to bootstrap it "
+            "before feed-scoped refreshes"
+        )
+    t_meta = sio.read_bucket_meta(spark, turns)
+    if t_meta is None:
+        raise ValueError(
+            f"turns table at {turns} is not bucketed "
+            "(no _buckets.json): feed-scoped pruning needs "
+            "sio.write_table's conv_id bucketing"
+        )
+    if t_meta["partition_key"] != "conv_id":
+        # pruning here is load-bearing for CORRECTNESS, not just speed:
+        # the fed conversations' rows must be inside the pruned buckets
+        # or the refresh sees them as absent and DELETES their triples
+        # (removed-conversation semantics)
+        raise ValueError(
+            f"turns table at {turns} is bucketed on "
+            f"{t_meta['partition_key']} (_buckets.json), not conv_id: "
+            "feed-scoped pruning would miss the fed conversations and "
+            "delete their triples; rebucket on conv_id or pass the "
+            "full snapshot as a DataFrame"
+        )
+    return t_meta
 
 
 def materialize_frontier(
@@ -542,19 +432,14 @@ class RefreshResult(NamedTuple):
 
 def refresh_triples_partitioned(
     spark: SparkSession,
-    turns: DataFrame,
+    turns: DataFrame | str,
     stage_location: str,
     impl: str = "native",
     n_buckets: int | None = None,
     change_feed: DataFrame | None = None,
-    _feed_normalized: bool = False,
 ) -> RefreshResult:
     """Idempotent in-place refresh of a persisted Stage-A table: the
     parquet stand-in for Iceberg ``MERGE INTO`` (SURVEY.md §2 #2/#10).
-    (``_feed_normalized`` is internal — ``refresh_from_feed`` passes a
-    feed it already null-filtered, distinct-ed and checkpointed, so
-    repeating that normalization here would cost a second eager
-    materialization per refresh tick.)
 
     ``change_feed`` — a DataFrame with a ``conv_id`` column naming the
     conversations known to have changed — is the RecentChanges analog
@@ -567,19 +452,32 @@ def refresh_triples_partitioned(
     skipped entirely: the refresh reads only the feed, the touched
     buckets, and one semi-join pass over ``turns`` for re-extraction.
     Feed rows for conversations that did not actually change are
-    idempotent (their buckets rewrite to identical contents); a
-    changed conversation MISSING from the feed stays stale until a
-    feed mentions it or a detection-mode refresh runs — same contract
-    as polling RecentChanges.  A fed conversation with NO rows in the
-    ``turns`` snapshot is treated as a DELETION: its triples and its
-    frontier row are removed (this is how the remove-conversation
-    path works, tested in tests/test_refresh_e2e.py) — so feeds must
-    be emitted only after the corresponding raw-table upsert has
-    landed, or a transiently-missing conversation will be dropped and
-    stay gone until a later feed re-lists it.  Without a feed (default), changes are
-    detected from the snapshot as below.  The one-time frontier
+    idempotent (their buckets rewrite to identical contents); NULL
+    feed rows name nothing and are dropped; a changed conversation
+    MISSING from the feed stays stale until a feed mentions it or a
+    detection-mode refresh runs — same contract as polling
+    RecentChanges.  A fed conversation with NO rows in the ``turns``
+    snapshot is treated as a DELETION: its triples and its frontier
+    row are removed (this is how the remove-conversation path works,
+    tested in tests/test_refresh_e2e.py) — so feeds must be emitted
+    only after the corresponding raw-table upsert has landed, or a
+    transiently-missing conversation will be dropped and stay gone
+    until a later feed re-lists it.  Without a feed (default), changes
+    are detected from the snapshot as below.  The one-time frontier
     bootstrap always runs in detection mode (it must see the full
     corpus once).
+
+    ``turns`` as a STRING names a BUCKETED raw-turns table
+    (``sio.write_table`` layout, keyed on conv_id) that already holds
+    the fed conversations' current turns; it needs a ``change_feed``
+    and an existing ``_frontier`` (``validate_refresh_preconditions``
+    lists every refusal).  The production loop bucket-upserts a batch
+    of new turns into that table, then this refresh reads only the raw
+    buckets holding fed conversations, so the re-extraction scan over
+    the full snapshot disappears (29M turns, 10-conversation delta:
+    ~14 s vs ~47 s for a feed over a DataFrame snapshot,
+    BENCH/BASELINE.md).  Each table prunes with its own recorded
+    modulus.
 
     Only the ``p_hash`` buckets containing a changed conversation are
     rewritten (dynamic partition overwrite via ``sio.upsert_partitions``);
@@ -594,9 +492,9 @@ def refresh_triples_partitioned(
     done_max_idx)`` table co-located with (and bucket-upserted like)
     the stage table, so conversations that produce zero triples are
     still recorded as processed — a refresh with no new turns rewrites
-    NOTHING (the triples-derived frontier of ``changed_conversations``
-    would re-derive the zero-triple tail forever).  On first refresh
-    of a pre-frontier table the frontier bootstraps from the triples.
+    NOTHING (a frontier derived from the triples would re-derive the
+    zero-triple tail forever).  On first refresh of a pre-frontier
+    table the frontier bootstraps from the triples.
 
     The table's bucketing comes from the ``_buckets.json`` sidecar
     recorded at write time; passing an ``n_buckets`` that contradicts
@@ -614,7 +512,9 @@ def refresh_triples_partitioned(
     elif n_buckets is None:
         n_buckets = sio.DEFAULT_BUCKETS
 
-    _refuse_unfinished_backfill(spark, stage_location)
+    t_meta = validate_refresh_preconditions(
+        spark, stage_location, turns, change_feed
+    )
 
     floc = _frontier_location(stage_location)
     bootstrap = not fsutil.exists(spark, floc)
@@ -633,13 +533,30 @@ def refresh_triples_partitioned(
         # the constant seed bucket, not NULL — they wouldn't break
         # the touched list, just drag one bucket in for no reason.)
         changed = (
-            change_feed
-            if _feed_normalized
-            else change_feed.select("conv_id")
+            change_feed.select("conv_id")
             .filter(F.col("conv_id").isNotNull())
             .distinct()
             .localCheckpoint(eager=True)
         )
+        if t_meta is not None:
+            # a raw-turns table (validated: frontier exists, bucketed
+            # on conv_id): read only the buckets holding fed
+            # conversations, pruned by the raw table's own modulus
+            t_touched = sorted(
+                r.p
+                for r in changed.select(
+                    F.pmod(F.xxhash64("conv_id"), F.lit(t_meta["n_buckets"]))
+                    .cast("int")
+                    .alias("p")
+                )
+                .distinct()
+                .collect()
+            )
+            turns = (
+                sio.read_table(spark, turns, keep_bucket_col=True)
+                .filter(F.col("p_hash").isin(t_touched))
+                .drop("p_hash")
+            )
     else:
         if bootstrap:
             # one-time full scan: no frontier table yet, derive it from

@@ -1,13 +1,14 @@
 """End-to-end incremental pipeline refresh — the RecentChanges analog
-propagated through EVERY stage, not just extraction.
+propagated through EVERY stage, not just extraction.  This is the one
+pipeline refresh (CLI ``--refresh``).
 
-``__main__ --refresh`` (and ``refresh_triples_partitioned``) keep the
-Stage-A table O(delta), but then drop the downstream checkpoints and
-recompute link → canonicalize → materialize → entities from scratch:
-Stage B re-derives the distinct surface universe with a full-corpus
-shuffle, Stage C re-runs the global connected-components fixpoint, and
-Stage D rewrites the whole materialized table.  At 10^12 turns a
-ten-conversation delta must not cost four corpus-wide jobs.
+``refresh_triples_partitioned`` keeps the Stage-A table O(delta), but
+recomputing link → canonicalize → materialize → entities from scratch
+after it would cost four corpus-wide jobs: Stage B re-derives the
+distinct surface universe with a full-corpus shuffle, Stage C re-runs
+the global connected-components fixpoint, and Stage D rewrites the
+whole materialized table.  At 10^12 turns a ten-conversation delta
+must not cost that.
 
 :func:`refresh_pipeline` makes the downstream stages O(delta) too, by
 exploiting what each stage actually depends on:
@@ -65,8 +66,6 @@ from lexicator_spark.operators.canonicalize import (
     update_components,
 )
 from lexicator_spark.operators.incremental import (
-    RefreshResult,
-    refresh_from_feed,
     refresh_triples_partitioned,
     validate_refresh_preconditions,
 )
@@ -203,11 +202,12 @@ def ensure_surface_stats(
     table AS OF the last downstream (link/canonicalize) sync — it is
     the record of the surface universe Stage B last saw.  Every path
     that mutates ``triples_raw`` keeps it that way: ``refresh_pipeline``
-    updates stats and downstream together; CLI ``--refresh`` updates
-    stats for its touched buckets and then recomputes downstream in
-    full; stream-epoch compaction deliberately does NOT touch stats —
-    the next detection-mode refresh re-detects the compacted
-    conversations from the frontier and squares both up."""
+    (also behind CLI ``--refresh``) updates stats and downstream
+    together; its crash recovery drops the table so it is rebuilt as
+    of the recovered raw table; stream-epoch compaction deliberately
+    does NOT touch stats — the next detection-mode refresh re-detects
+    the compacted conversations from the frontier and squares both
+    up."""
     loc = _stats_location(out_root)
     if not fsutil.exists(spark, os.path.join(loc, "_schema.json")):
         raw = sio.read_table(
@@ -293,10 +293,11 @@ def _delta_bucket_counts(
     refresh must never pay a corpus-wide job for lineage bookkeeping
     (this module's own contract: 'a ten-conversation delta must not
     cost corpus-wide jobs')."""
-    try:
-        prior = P._read_marker(spark, out_root, stage).get("bucket_counts")
-    except Exception:
-        prior = None
+    prior = (
+        P._read_marker(spark, out_root, stage).get("bucket_counts")
+        if P._is_done(spark, out_root, stage)
+        else None
+    )
     if prior is None:
         return P._bucket_counts(spark, table_path)
     if fresh_counts is not None:
@@ -325,17 +326,16 @@ def update_stage_bucket_counts(
     touched: list[int],
 ) -> None:
     """Keep a stage marker's per-bucket counts current after an
-    out-of-band mutation of its table (CLI ``--refresh`` refreshes
-    triples_raw without going through ``refresh_pipeline``; stream
-    compaction folds epochs into it) — otherwise the next
-    ``refresh_pipeline``'s O(delta) lineage counts would merge against
-    stale untouched-bucket numbers and persist the error back into the
-    marker.  Same O(delta) merge as ``_delta_bucket_counts``; no-op
-    when the root has no marker for the stage (standalone tables)."""
-    try:
-        marker = P._read_marker(spark, out_root, stage)
-    except Exception:
+    out-of-band mutation of its table (stream compaction folds epochs
+    into triples_raw) — otherwise the next ``refresh_pipeline``'s
+    O(delta) lineage counts would merge against stale untouched-bucket
+    numbers and persist the error back into the marker.  Same O(delta)
+    merge as ``_delta_bucket_counts``; no-op when the root has no
+    marker for the stage (standalone tables).  A marker that exists
+    but cannot be read raises."""
+    if not P._is_done(spark, out_root, stage):
         return
+    marker = P._read_marker(spark, out_root, stage)
     merged = _delta_bucket_counts(spark, table_path, out_root, stage, touched)
     marker["bucket_counts"] = merged
     if merged is not None:
@@ -345,11 +345,10 @@ def update_stage_bucket_counts(
 
 def refresh_pipeline(
     spark: SparkSession,
-    turns: DataFrame | None,
+    turns: DataFrame | str,
     out_root: str,
     change_feed: DataFrame | None = None,
     impl: str = "native",
-    turns_location: str | None = None,
 ) -> RefreshPipelineResult:
     """Refresh every stage table under ``out_root`` for a turns delta,
     leaving each one row-identical to a from-scratch ``run_pipeline``
@@ -358,23 +357,20 @@ def refresh_pipeline(
     arguments.
 
     The turns snapshot feeds ONLY Stage A (every downstream stage
-    derives from the refreshed raw table), so the Stage-A ladder's
-    fully-pruned shape plugs in directly: pass ``turns_location`` (a
-    BUCKETED raw-turns table already upserted with the delta) plus
-    ``change_feed`` instead of ``turns``, and extraction goes through
-    ``refresh_from_feed`` — the raw read partition-prunes to the fed
-    conversations' buckets and the last O(corpus) pass (the
-    re-extraction semi-join over the snapshot) disappears.  Measured
-    at 29.3M turns in BENCH/BASELINE.md (`refresh_e2e` section)."""
-    if turns is None and turns_location is None:
-        raise ValueError("refresh_pipeline needs turns or turns_location")
-    if turns_location is not None and change_feed is None:
-        raise ValueError(
-            "refresh_pipeline(turns_location=...) is the pruned "
-            "feed path — it needs change_feed (without a feed the "
-            "detection aggregate must see the full snapshot: pass "
-            "turns instead)"
-        )
+    derives from the refreshed raw table), so ``turns`` and
+    ``change_feed`` pass straight through to
+    ``refresh_triples_partitioned``: a DataFrame snapshot, or — with a
+    feed — the location of a BUCKETED raw-turns table already upserted
+    with the delta, whose read then partition-prunes to the fed
+    conversations' buckets so the last O(corpus) pass disappears.
+    Measured at 29.3M turns in BENCH/BASELINE.md (`refresh_e2e`
+    section)."""
+    raw_path = os.path.join(out_root, "triples_raw")
+    # validate BEFORE any write — crash recovery included — and above
+    # all before opening the in-flight window: a refresh refused on its
+    # preconditions mutated nothing, and must not strand a marker that
+    # would force a spurious O(corpus) downstream rebuild
+    validate_refresh_preconditions(spark, raw_path, turns, change_feed)
     if recover_inflight_refresh(spark, out_root):
         # a prior refresh died between its Stage-A upsert and the
         # downstream sync; its delta cannot be re-detected (the
@@ -385,16 +381,11 @@ def refresh_pipeline(
         # modulus: run_pipeline's default would rebucket `triples` to
         # DEFAULT_BUCKETS and the co-upsert modulus check below would
         # then refuse every future refresh of a non-default root.
-        recovery_turns = (
-            turns if turns is not None
-            else sio.read_table(spark, turns_location)
-        )
-        raw_meta = sio.read_bucket_meta(
-            spark, os.path.join(out_root, "triples_raw")
-        )
+        raw_meta = sio.read_bucket_meta(spark, raw_path)
         P.run_pipeline(
-            spark, recovery_turns, out_root, resume=True, impl=impl,
-            lineage_input_counts=False,
+            spark,
+            sio.read_table(spark, turns) if isinstance(turns, str) else turns,
+            out_root, resume=True, impl=impl, lineage_input_counts=False,
             n_buckets=(
                 raw_meta["n_buckets"] if raw_meta else sio.DEFAULT_BUCKETS
             ),
@@ -407,7 +398,6 @@ def refresh_pipeline(
                 f"'{stage}' has no checkpoint under {out_root} — run "
                 "run_pipeline first"
             )
-    raw_path = os.path.join(out_root, "triples_raw")
     triples_path = os.path.join(out_root, "triples")
     same_as_path = os.path.join(out_root, "same_as")
     canonical_path = os.path.join(out_root, "canonical")
@@ -444,17 +434,6 @@ def refresh_pipeline(
     old_totals_future = side_pool.submit(_pin_old_totals)
 
     # ── Stage A (delegated) ──────────────────────────────────────
-    # validate BEFORE opening the in-flight window: a refresh refused
-    # on its preconditions mutated nothing, and must not strand a
-    # marker that would force a spurious O(corpus) downstream rebuild
-    try:
-        validate_refresh_preconditions(
-            spark, raw_path, turns_location=turns_location
-        )
-    except BaseException:
-        old_totals_future.cancel()
-        side_pool.shutdown(wait=True)
-        raise
     # in-flight from here until every downstream stage is synced: the
     # Stage-A upsert advances the frontier, after which the delta is
     # undetectable — a crash inside this window must force a
@@ -462,14 +441,9 @@ def refresh_pipeline(
     begin_refresh(spark, out_root)
     t0 = time.monotonic()
     try:
-        if turns_location is not None:
-            res: RefreshResult = refresh_from_feed(
-                spark, turns_location, raw_path, change_feed, impl=impl
-            )
-        else:
-            res = refresh_triples_partitioned(
-                spark, turns, raw_path, impl=impl, change_feed=change_feed
-            )
+        res = refresh_triples_partitioned(
+            spark, turns, raw_path, impl=impl, change_feed=change_feed
+        )
     except BaseException:
         side_pool.shutdown(wait=True)
         raise

@@ -223,7 +223,7 @@ def upsert_partitions(
     touched_buckets: list[int] | None = None,
     files_per_bucket: int = 1,
     pin_replacement: bool = True,
-) -> None:
+) -> list[tuple[int, int]] | None:
     """Idempotent partition-level upsert on the parquet backend — the
     stand-in for Iceberg ``MERGE INTO``: dynamic partition overwrite
     rewrites ONLY the ``p_hash`` buckets present in ``df``; every
@@ -253,8 +253,11 @@ def upsert_partitions(
     the intra-bucket salt needs a hashable key.
 
     Returns the replacement's per-bucket row counts (sorted
-    ``[(bucket, count), ...]``) when ``touched_buckets`` is given,
-    else ``None``.  The counts ride the became-empty probe the upsert
+    ``[(bucket, count), ...]``, one entry per bucket the replacement
+    wrote — a touched bucket it left empty, and so deleted, has no
+    entry) when ``touched_buckets`` is given, else ``None``.
+    ``plans.refresh`` builds its marker and lineage counts from this
+    value.  The counts ride the became-empty probe the upsert
     already runs over the pinned frame (a ``groupBy(p_hash).count()``
     instead of a bare ``distinct()`` — same tiny job), so callers
     maintaining per-bucket lineage (``plans.refresh``) never pay a

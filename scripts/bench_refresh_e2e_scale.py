@@ -102,7 +102,7 @@ def main() -> None:
 
     # ── fully-pruned path: bucketed raw-turns table + feed, so the
     # Stage-A re-extraction reads only the fed conversations' buckets
-    # (refresh_from_feed) instead of semi-joining the whole snapshot.
+    # instead of semi-joining the whole snapshot.
     # Staging the raw table is untimed (a production loop maintains
     # it continuously); the per-delta raw upsert IS timed separately,
     # mirroring scripts/bench_refresh_invariance.py.
@@ -144,9 +144,7 @@ def main() -> None:
         )
         upsert_walls.append(round(time.monotonic() - t0, 1))
         t0 = time.monotonic()
-        res = refresh_pipeline(
-            spark, None, kg, change_feed=feed, turns_location=raw_turns
-        )
+        res = refresh_pipeline(spark, raw_turns, kg, change_feed=feed)
         pruned_walls.append(round(time.monotonic() - t0, 1))
         pruned_metas.append(
             {"n_changed": res.n_changed, "buckets": res.n_buckets_touched}

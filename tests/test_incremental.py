@@ -6,12 +6,7 @@ import os
 
 from lexicator_spark import synth
 from lexicator_spark.operators.extract import extract_triples
-from lexicator_spark.operators.incremental import (
-    changed_conversations,
-    extract_incremental,
-    refresh_triples,
-    refresh_triples_partitioned,
-)
+from lexicator_spark.operators.incremental import refresh_triples_partitioned
 from lexicator_spark.sources import io as sio
 
 
@@ -22,7 +17,11 @@ def _tset(df):
     }
 
 
-def test_incremental_refresh_equals_full_recompute(spark):
+def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
+    """First refresh of a stage table with no ``_frontier`` yet: the
+    bootstrap derives the frontier from the triples, so the changed
+    set is exactly the truly changed conversations plus those with
+    zero triples (no frontier row → re-derived, a no-op)."""
     full_corpus = synth.make_corpus(n_convs=50, seed=33, shuffled=False)
     # v1 = drop the last turn of every 3rd conversation + drop every
     # 7th conversation entirely → those convs are "changed/new" in v2
@@ -38,21 +37,18 @@ def test_incremental_refresh_equals_full_recompute(spark):
     v1 = synth.corpus_df(spark, synth.Corpus(rows=v1_rows))
     v2 = synth.corpus_df(spark, full_corpus)
 
-    done = extract_triples(v1).localCheckpoint()
-    changed = {r.conv_id for r in changed_conversations(v2, done).collect()}
+    done = extract_triples(v1)
+    loc = str(tmp_path / "triples_raw")
+    sio.write_table(done, loc, partition_key="conv_id", n_buckets=8)
+    all_convs = {r[0] for r in full_corpus.rows}
     expected = {
-        c for c in {r[0] for r in full_corpus.rows}
-        if int(c[1:]) % 7 == 0 or int(c[1:]) % 3 == 0
+        c for c in all_convs if int(c[1:]) % 7 == 0 or int(c[1:]) % 3 == 0
     }
-    # every truly changed conv is detected; the only extras allowed are
-    # convs with zero triples in the stage table (no frontier row →
-    # re-derived as a no-op, documented in operators/incremental.py)
-    assert expected <= changed
     with_triples = {r.conv_id for r in done.select("conv_id").distinct().collect()}
-    assert all(c not in with_triples for c in changed - expected)
 
-    refreshed = refresh_triples(v2, done)
-    assert _tset(refreshed) == _tset(extract_triples(v2))
+    refreshed = refresh_triples_partitioned(spark, v2, loc)
+    assert refreshed.n_changed == len(expected | (all_convs - with_triples))
+    assert _tset(refreshed.table) == _tset(extract_triples(v2))
 
 
 def _file_state(root):
@@ -127,12 +123,26 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     assert auto.n_changed == 0
 
 
-def test_incremental_noop_when_nothing_changed(spark):
+def test_incremental_noop_when_nothing_changed(spark, tmp_path):
+    """Same snapshot as the stage table: the bootstrap refresh only
+    re-derives the zero-triple conversations (to nothing), and the
+    refresh after it is a true no-op that touches no file."""
     corpus = synth.make_corpus(n_convs=20, seed=5)
     turns = synth.corpus_df(spark, corpus)
     done = extract_triples(turns).localCheckpoint()
-    assert extract_incremental(turns, done).count() == 0
-    assert _tset(refresh_triples(turns, done)) == _tset(done)
+    loc = str(tmp_path / "triples_raw")
+    sio.write_table(done, loc, partition_key="conv_id", n_buckets=8)
+    with_triples = {r.conv_id for r in done.select("conv_id").distinct().collect()}
+
+    res = refresh_triples_partitioned(spark, turns, loc)
+    assert res.n_changed == len({r[0] for r in corpus.rows} - with_triples)
+    assert _tset(res.table) == _tset(done)
+
+    stable = _file_state(loc)
+    again = refresh_triples_partitioned(spark, turns, loc)
+    assert (again.n_changed, again.n_buckets_touched) == (0, 0)
+    assert _file_state(loc) == stable
+    assert _tset(again.table) == _tset(done)
 
 
 def test_read_turns_jsonl_and_csv_equal_parquet(spark, tmp_path):
@@ -256,17 +266,19 @@ def test_change_feed_refresh(spark, tmp_path):
     assert _tset(res.table) == {t for t in v2_triples if t[3] != victim}
 
 
-def test_refresh_from_feed_end_to_end(spark, tmp_path):
+def test_pruned_feed_refresh_end_to_end(spark, tmp_path):
     """The O(delta) ingest loop: raw turns live in a bucketed table,
     a batch of new turns is bucket-upserted along with its conv_id
-    list (the feed), and refresh_from_feed re-extracts exactly those
-    conversations reading only their raw/stage buckets — equals a
-    full recompute, leaves every untouched file byte-identical on
-    BOTH tables, and refuses to run before the frontier bootstrap."""
+    list (the feed), and a refresh given the table's location
+    re-extracts exactly those conversations reading only their
+    raw/stage buckets — equals a full recompute, leaves every
+    untouched file byte-identical on BOTH tables, and refuses to run
+    before the frontier bootstrap or without a feed."""
     import pytest
     from pyspark.sql import functions as F
 
-    from lexicator_spark.operators.incremental import refresh_from_feed
+    def refresh_from_table(raw, stage, feed):
+        return refresh_triples_partitioned(spark, raw, stage, change_feed=feed)
 
     full_corpus = synth.make_corpus(n_convs=60, seed=23, shuffled=False)
     conv_ids = sorted({r[0] for r in full_corpus.rows})
@@ -294,7 +306,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
 
     # pre-frontier: feed-scoped refresh must refuse, not silently skip
     with pytest.raises(ValueError, match="_frontier"):
-        refresh_from_feed(spark, raw_loc, stage_loc, feed)
+        refresh_from_table(raw_loc, stage_loc, feed)
     # bootstrap via one full-corpus detection refresh (v1: no-op work)
     refresh_triples_partitioned(spark, v1, stage_loc)
 
@@ -302,7 +314,11 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
     plain = str(tmp_path / "plain")
     v1.write.parquet(plain)
     with pytest.raises(ValueError, match="bucketed"):
-        refresh_from_feed(spark, plain, stage_loc, feed)
+        refresh_from_table(plain, stage_loc, feed)
+    # a table location without a feed is refused (detection would
+    # need the full snapshot)
+    with pytest.raises(ValueError, match="needs change_feed"):
+        refresh_triples_partitioned(spark, raw_loc, stage_loc)
 
     # ingest batch: upsert the new turns into the raw table — the
     # replacement must carry COMPLETE content for every touched raw
@@ -331,7 +347,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
     }
     raw_before = _file_state(raw_loc)
     stage_before = _file_state(stage_loc)
-    res = refresh_from_feed(spark, raw_loc, stage_loc, feed)
+    res = refresh_from_table(raw_loc, stage_loc, feed)
     assert res.n_changed == len(grew)
     assert _tset(res.table) == _tset(extract_triples(v2))
 
@@ -350,7 +366,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
             assert _file_state(stage_loc).get(rel) == meta, rel
 
     # steady state: same feed again is idempotent
-    res2 = refresh_from_feed(spark, raw_loc, stage_loc, feed)
+    res2 = refresh_from_table(raw_loc, stage_loc, feed)
     assert _tset(res2.table) == _tset(extract_triples(v2))
 
 
@@ -358,14 +374,11 @@ def test_build_time_frontier_materialization(spark, tmp_path):
     """run_pipeline writes _frontier at build time (turns-derived), so
     the first refresh is delta-scoped: no detection bootstrap, a
     same-snapshot detection refresh is a true no-op even for
-    zero-triple conversations, and refresh_from_feed runs immediately
-    instead of raising pre-bootstrap."""
+    zero-triple conversations, and a feed refresh over a bucketed
+    raw-turns table runs immediately instead of raising pre-bootstrap."""
     from pyspark.sql import functions as F
 
-    from lexicator_spark.operators.incremental import (
-        materialize_frontier,
-        refresh_from_feed,
-    )
+    from lexicator_spark.operators.incremental import materialize_frontier
     from lexicator_spark.plans.pipeline import run_pipeline
     from lexicator_spark.sources import fsutil
 
@@ -403,9 +416,9 @@ def test_build_time_frontier_materialization(spark, tmp_path):
     )
     v2 = turns.unionByName(delta)
     sio.write_table(v2, raw_turns_loc, partition_key="conv_id")
-    res = refresh_from_feed(
+    res = refresh_triples_partitioned(
         spark, raw_turns_loc, raw,
-        spark.createDataFrame([(c,) for c in grown], "conv_id string"),
+        change_feed=spark.createDataFrame([(c,) for c in grown], "conv_id string"),
     )
     assert res.n_changed == len(grown)
     assert _tset(res.table) == _tset(extract_triples(v2))
@@ -416,8 +429,6 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     dropped at the boundary, not hashed into a NULL bucket that
     poisons the touched-bucket pruning lists."""
     from pyspark.sql import functions as F
-
-    from lexicator_spark.operators.incremental import refresh_from_feed
 
     corpus = synth.make_corpus(n_convs=30, seed=29, shuffled=False)
     turns = synth.corpus_df(spark, corpus)
@@ -442,8 +453,9 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     feed = spark.createDataFrame(
         [(grown[0],), (None,), (grown[1],), (None,)], "conv_id string"
     )
-    # both paths digest the NULLs silently and refresh only the real ids
-    res = refresh_from_feed(spark, raw, loc, feed)
+    # both turns forms digest the NULLs silently and refresh only the
+    # real ids: a raw-turns table location, then a DataFrame snapshot
+    res = refresh_triples_partitioned(spark, raw, loc, change_feed=feed)
     assert res.n_changed == 2
     assert _tset(res.table) == _tset(extract_triples(v2))
     res = refresh_triples_partitioned(spark, v2, loc, n_buckets=8,
@@ -451,17 +463,14 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     assert res.n_changed == 2  # idempotent re-feed, NULLs still ignored
 
 
-def test_refresh_from_feed_rejects_non_conv_id_bucketing(spark, tmp_path):
+def test_pruned_feed_refresh_rejects_non_conv_id_bucketing(spark, tmp_path):
     """Feed-scoped pruning is load-bearing for correctness: a raw
     table bucketed on another key would make the pruned read miss the
     fed conversations entirely, and the removed-conversation semantics
     would then DELETE their triples.  Refuse up front instead."""
     import pytest
 
-    from lexicator_spark.operators.incremental import (
-        materialize_frontier,
-        refresh_from_feed,
-    )
+    from lexicator_spark.operators.incremental import materialize_frontier
 
     turns = synth.corpus_df(spark, synth.make_corpus(n_convs=10, seed=23))
     raw = str(tmp_path / "turns_by_tool")
@@ -470,4 +479,4 @@ def test_refresh_from_feed_rejects_non_conv_id_bucketing(spark, tmp_path):
     materialize_frontier(spark, turns, stage, n_buckets=8)
     feed = spark.createDataFrame([("c0",)], "conv_id string")
     with pytest.raises(ValueError, match="bucketed on tool"):
-        refresh_from_feed(spark, raw, stage, feed)
+        refresh_triples_partitioned(spark, raw, stage, change_feed=feed)

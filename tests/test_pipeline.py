@@ -241,8 +241,9 @@ def test_cli_graph_verb(spark, tmp_path):
 
 def test_cli_full_run_then_incremental_refresh(tmp_path):
     """CLI driver (SURVEY §2 #13): full run, then --refresh on the same
-    out root — extract is served by the partition-level upsert (stage
-    skipped), downstream stages recompute."""
+    out root — every stage table is updated O(delta) in place (no
+    stage recompute), and a refresh of an unchanged corpus touches
+    nothing."""
     import json
     import subprocess
     import sys
@@ -265,41 +266,27 @@ def test_cli_full_run_then_incremental_refresh(tmp_path):
     }
 
     # grow the corpus → refresh re-extracts the new conversations and
-    # recomputes downstream stages
+    # syncs every downstream table; the complete root needs no build
     msgs = run_cli(80, "--refresh")
-    stats = next(m for m in msgs if "refreshed_convs" in m)
+    assert len(msgs) == 1
+    stats = msgs[0]
     assert stats["refreshed_convs"] > 0 and stats["buckets_touched"] > 0
-    final = msgs[-1]
-    assert "extract" in final["stages_skipped"]
-    assert {"link", "canonicalize", "materialize", "entities"} <= set(
-        final["stages_run"]
-    )
-
-    # same corpus again → true no-op: nothing re-extracted, every
-    # checkpoint kept, no stage recomputed
-    msgs = run_cli(80, "--refresh")
-    stats = next(m for m in msgs if "refreshed_convs" in m)
-    assert stats == {"refreshed_convs": 0, "buckets_touched": 0}
-    final = msgs[-1]
-    assert final["stages_run"] == []
-
-    # --refresh-e2e: grow again — every stage table is updated
-    # O(delta) in one verb (no downstream stage recompute jobs)
-    stats = run_cli(100, "--refresh-e2e")[-1]
-    assert stats["refreshed_convs"] >= 20
-    assert "extract" in stats["stages_refreshed"]
+    assert stats["stages_refreshed"][0] == "extract"
     assert {"materialize", "entities"} <= set(stats["stages_refreshed"])
 
-    # and the e2e no-op: same corpus → zero stages touched
-    stats = run_cli(100, "--refresh-e2e")[-1]
-    assert stats["refreshed_convs"] == 0
-    assert stats["stages_refreshed"] == []
+    # same corpus again → true no-op: nothing re-extracted, no stage
+    # table touched
+    msgs = run_cli(80, "--refresh")
+    assert len(msgs) == 1
+    assert msgs[0]["refreshed_convs"] == 0
+    assert msgs[0]["buckets_touched"] == 0
+    assert msgs[0]["stages_refreshed"] == []
 
 
 def test_cli_flag_conflicts_error_before_jvm():
-    # both refresh verbs must REJECT a --stage cutoff (and --refresh-e2e
-    # the build-only flags) instead of silently ignoring it; argparse
-    # errors fire before any SparkSession is built, so this is JVM-free
+    # --refresh must REJECT a --stage cutoff and the build-only flags
+    # instead of silently ignoring them; argparse errors fire before
+    # any SparkSession is built, so this is JVM-free
     import pytest
 
     from lexicator_spark.__main__ import main
@@ -307,9 +294,8 @@ def test_cli_flag_conflicts_error_before_jvm():
     base = ["--synth", "5", "--out", "/tmp/unused"]
     for extra in (
         ["--refresh", "--stage", "extract"],
-        ["--refresh-e2e", "--stage", "extract"],
-        ["--refresh-e2e", "--no-resume"],
-        ["--refresh-e2e", "--backfill", "4"],
+        ["--refresh", "--no-resume"],
+        ["--refresh", "--backfill", "4"],
     ):
         with pytest.raises(SystemExit) as exc:
             main(base + extra)
@@ -435,20 +421,24 @@ def test_cli_dedup_paragraphs_and_turns_verbs(spark, tmp_path):
     assert not flagged[("c2", 0)].is_first
 
 
-def test_cli_stage_cutoff(tmp_path):
+def test_cli_stage_cutoff(spark, tmp_path):
     """--stage X runs the pipeline up to and including X (the flag was
     previously parsed but ignored — every invocation ran all five
-    stages); a later full run resumes from the checkpoints."""
+    stages); a later full run resumes from the checkpoints, and so
+    does --refresh, which then refreshes a grown corpus to exactly a
+    fresh full build."""
     import json
     import subprocess
     import sys
 
+    from lexicator_spark.sources import io as sio
+
     out = str(tmp_path / "kg")
 
-    def run_cli(*extra, expect_rc=0):
+    def run_cli(*extra, expect_rc=0, root=out, n_convs=30):
         r = subprocess.run(
             [sys.executable, "-m", "lexicator_spark",
-             "--synth", "30", "--out", out, "--cpus", "4", *extra],
+             "--synth", str(n_convs), "--out", root, "--cpus", "4", *extra],
             capture_output=True, text=True, cwd="/root/repo", timeout=420,
         )
         assert r.returncode == expect_rc, r.stdout[-2000:] + r.stderr[-2000:]
@@ -466,16 +456,41 @@ def test_cli_stage_cutoff(tmp_path):
     final = run_cli()[-1]
     assert final["stages_run"] == ["materialize", "entities"]
 
-    # --refresh recomputes every downstream stage; a cutoff would
-    # close its crash-recovery window with stale stages → refused
+    # --refresh refreshes every stage in place; a cutoff has no
+    # meaning there → refused
     run_cli("--refresh", "--stage", "link", expect_rc=2)
+
+    # an extract-only root, then --refresh on a grown corpus: the
+    # missing stages are built from the existing raw table first, then
+    # the new conversations flow through every stage
+    cut = str(tmp_path / "cut")
+    run_cli("--stage", "extract", root=cut)
+    build, refresh = run_cli("--refresh", root=cut, n_convs=40)
+    assert build["stages_skipped"] == ["extract"]
+    assert build["stages_run"] == [
+        "link", "canonicalize", "materialize", "entities"
+    ]
+    assert refresh["refreshed_convs"] == 10
+
+    full = str(tmp_path / "full")
+    corpus = synth.make_corpus(40, seed=42)  # the CLI's --synth 40
+    run_pipeline(spark, synth.corpus_df(spark, corpus), full)
+
+    def rows(root, table):
+        df = sio.read_table(spark, os.path.join(root, table))
+        got = [tuple(r) for r in df.select(*sorted(df.columns)).collect()]
+        return sorted(got, key=repr)  # None-safe total order
+
+    for table in ("triples_raw", "same_as", "canonical", "triples", "entities"):
+        assert rows(cut, table) == rows(full, table), f"{table} diverged"
 
 
 def test_cli_refresh_recovers_after_crash(tmp_path):
-    """An in-flight marker left by a --refresh that died between its
-    raw upsert and the downstream recompute must force the next
-    --refresh to recompute the downstream stages even when its own
-    delta is empty (the crashed delta is undetectable by then)."""
+    """--refresh on an empty root builds it first.  An in-flight marker
+    left by a refresh that died between its raw upsert and the
+    downstream sync must force the next --refresh to rebuild the
+    downstream stages even when its own delta is empty (the crashed
+    delta is undetectable by then)."""
     import json
     import subprocess
     import sys
@@ -492,22 +507,36 @@ def test_cli_refresh_recovers_after_crash(tmp_path):
         return [json.loads(l) for l in r.stdout.splitlines()
                 if l.startswith("{")]
 
-    run_cli()
+    def downstream_marker_mtimes():
+        return {
+            stage: os.stat(
+                os.path.join(out, "_checkpoints", f"{stage}.json")
+            ).st_mtime_ns
+            for stage in ("link", "canonicalize", "materialize", "entities")
+        }
+
+    # empty root: --refresh falls through to a first full build, and
+    # the refresh right after it finds nothing to do
+    build, refresh = run_cli("--refresh")
+    assert set(build["stages_run"]) == {
+        "extract", "link", "canonicalize", "materialize", "entities"
+    }
+    assert refresh["refreshed_convs"] == 0
+
     marker = os.path.join(out, "_checkpoints", "_refresh_inflight.json")
     with open(marker, "w") as f:
         f.write('{"inflight": true}')
-
+    before = downstream_marker_mtimes()
     msgs = run_cli("--refresh")  # same corpus → no new delta
-    stats = next(m for m in msgs if "refreshed_convs" in m)
-    assert stats["refreshed_convs"] == 0
-    final = msgs[-1]
-    # recovery dropped the stale downstream markers → recomputed
-    assert {"link", "canonicalize", "materialize", "entities"} <= set(
-        final["stages_run"]
-    )
+    assert msgs[-1]["refreshed_convs"] == 0
+    # recovery dropped the stale downstream markers → recomputed and
+    # rewritten, window closed
+    after = downstream_marker_mtimes()
+    assert all(after[s] > before[s] for s in before), (before, after)
     assert not os.path.exists(marker)
 
     # and without a crash, the no-op stays a no-op
     msgs = run_cli("--refresh")
-    assert msgs[-1]["stages_run"] == []
+    assert msgs[-1]["stages_refreshed"] == []
+    assert downstream_marker_mtimes() == after
     assert not os.path.exists(marker)

@@ -254,10 +254,10 @@ def test_surface_stats_materialized_at_build(spark, tmp_path):
 
 
 def test_mixed_refresh_verbs_stay_consistent(spark, tmp_path):
-    """The CLI --refresh flow (Stage-A upsert + stats update + full
-    downstream recompute) followed by a --refresh-e2e must equal a
-    fresh build: the stats table records the universe the downstream
-    sync saw, whichever verb performed the sync."""
+    """A Stage-A-only refresh synced by hand (stats update + full
+    downstream recompute) followed by ``refresh_pipeline`` must equal
+    a fresh build: the stats table records the universe the
+    downstream sync saw, whichever path performed the sync."""
     import os
     from datetime import timedelta
 
@@ -277,8 +277,7 @@ def test_mixed_refresh_verbs_stay_consistent(spark, tmp_path):
     run_pipeline(spark, _df(spark, v1), root)
 
     # verb 1: Stage-A-only refresh + stats update + downstream
-    # recompute (exactly what __main__ --refresh does); the delta
-    # plants a NEW linkable surface, so a stale stats table would
+    # recompute from the resumable pipeline; the delta plants a NEW linkable surface, so a stale stats table would
     # poison the NEXT refresh's universe diff
     v2 = v1 + [turn("zmix01", 0, f"note [[{LINKED_ADD}]] here", 1)]
     res = refresh_triples_partitioned(
@@ -345,10 +344,10 @@ def test_compact_then_e2e_refresh_restores_consistency(spark, tmp_path):
 
 
 def test_refresh_pipeline_pruned_feed_path(spark, tmp_path):
-    """turns_location + change_feed: Stage A goes through
-    refresh_from_feed (raw read pruned to the fed conversations'
-    buckets — no snapshot semi-join), and the downstream propagation
-    still leaves every stage equal to a full rebuild."""
+    """A bucketed raw-turns table location + change_feed: the Stage-A
+    raw read prunes to the fed conversations' buckets (no snapshot
+    semi-join), and the downstream propagation still leaves every
+    stage equal to a full rebuild."""
     from datetime import timedelta
 
     t0 = synth.EPOCH + timedelta(days=13)
@@ -386,9 +385,7 @@ def test_refresh_pipeline_pruned_feed_path(spark, tmp_path):
         touched_buckets=touched,
     )
     feed = spark.createDataFrame([("zprn01",)], "conv_id string")
-    res = refresh_pipeline(
-        spark, None, root, change_feed=feed, turns_location=raw_turns
-    )
+    res = refresh_pipeline(spark, raw_turns, root, change_feed=feed)
     assert res.n_changed == 1 and res.surfaces_added >= 1
 
     full = str(tmp_path / "full")
@@ -398,7 +395,7 @@ def test_refresh_pipeline_pruned_feed_path(spark, tmp_path):
     # pruned path without a feed is an explicit error, not a silent
     # full-snapshot detection
     with pytest.raises(ValueError, match="needs change_feed"):
-        refresh_pipeline(spark, None, root, turns_location=raw_turns)
+        refresh_pipeline(spark, raw_turns, root)
 
 
 def test_refresh_pipeline_requires_complete_build(spark, tmp_path):
@@ -492,18 +489,17 @@ def test_refresh_pipeline_validation_failure_strands_no_marker(spark, tmp_path):
     root = str(tmp_path / "inc")
     run_pipeline(spark, _df(spark, base), root)
 
-    # unbucketed turns_location → the feed-pruned path must refuse
+    # unbucketed raw-turns location → the feed-pruned path must refuse
     plain = str(tmp_path / "plain_turns")
     _df(spark, base).write.parquet(plain)
     feed = _df(spark, base).select("conv_id").limit(1)
     with pytest.raises(ValueError, match="not bucketed"):
-        refresh_pipeline(spark, None, root, turns_location=plain,
-                         change_feed=feed)
+        refresh_pipeline(spark, plain, root, change_feed=feed)
     assert not fsutil.exists(spark, _inflight_path(root))
 
-    # turns_location without a feed is refused before any marker too
+    # a location without a feed is refused before any marker too
     with pytest.raises(ValueError, match="change_feed"):
-        refresh_pipeline(spark, None, root, turns_location=plain)
+        refresh_pipeline(spark, plain, root)
     assert not fsutil.exists(spark, _inflight_path(root))
 
     # and the root still refreshes normally afterwards (no stranded
@@ -512,3 +508,30 @@ def test_refresh_pipeline_validation_failure_strands_no_marker(spark, tmp_path):
     assert res.n_changed == 0
     assert not fsutil.exists(spark, _inflight_path(root))
     assert os.path.exists(os.path.join(root, "entities"))
+
+
+def test_corrupt_marker_fails_bucket_count_upkeep(spark, tmp_path):
+    """A stage marker that exists but cannot be read is an error, not
+    "no marker": treating it as absent would leave the marker's
+    per-bucket counts stale for every later O(delta) merge."""
+    import json
+    import os
+
+    from lexicator_spark.plans.refresh import (
+        _delta_bucket_counts,
+        update_stage_bucket_counts,
+    )
+
+    root = str(tmp_path / "kg")
+    os.makedirs(os.path.join(root, "_checkpoints"))
+    with open(os.path.join(root, "_checkpoints", "extract.json"), "w") as f:
+        f.write('{"stage": "extract", "bucket_co')
+    raw = os.path.join(root, "triples_raw")
+    with pytest.raises(json.JSONDecodeError):
+        update_stage_bucket_counts(spark, root, "extract", raw, [0])
+    with pytest.raises(json.JSONDecodeError):
+        _delta_bucket_counts(
+            spark, raw, root, "extract", [0], fresh_counts=[(0, 1)]
+        )
+    # a stage with no marker at all stays a no-op (standalone tables)
+    update_stage_bucket_counts(spark, root, "link", raw, [0])
